@@ -116,38 +116,110 @@ def cover_2d(x1: int, y1: int, x2: int, y2: int, log_n: int,
     return out
 
 
+def _floor_log2(v: np.ndarray) -> np.ndarray:
+    """floor(log2 v) per element of a positive int64 array below 2^53
+    (frexp is exact there)."""
+    return np.frexp(v.astype(np.float64))[1].astype(np.int64) - 1
+
+
+def canonical_cover_np(a: np.ndarray, b: np.ndarray, log_n: int,
+                       floor_k: int = 0):
+    """canonical_cover over many inclusive ranges [a[i], b[i]] at once;
+    -> (range_idx, level, start, coverage) arrays, grouped by range in
+    input order and ascending by start within a range, which is
+    canonical_cover's order.
+
+    No loop over ranges or greedy steps: after the partial head and
+    tail blocks, the aligned middle [A, B) (in floor blocks) splits at
+    M, the multiple of the highest power of two in (A, B]. [A, M) is
+    one block per set bit of M - A, smallest first, and [M, B) one
+    block per set bit of B - M, largest first — the blocks greedy
+    picks. Ranges that are empty once clamped to [0, 2^log_n) (at most
+    one element each) go through canonical_cover itself."""
+    a = np.asarray(a, np.int64)
+    b = np.asarray(b, np.int64)
+    f, n = floor_k, 1 << log_n
+    block = 1 << f
+    lo, hi = np.maximum(a, 0), np.minimum(b, n - 1)
+    ok = lo <= hi
+    a_blk, b_blk = lo >> f, hi >> f
+    single = ok & (a_blk == b_blk)
+    head = ok & ~single & ((lo & (block - 1)) != 0)
+    tail = ok & ~single & (((hi + 1) & (block - 1)) != 0)
+    parts = []                  # (range_idx, level, start, coverage)
+
+    def emit(idx, level, start, cov):     # level, cov: scalar or per idx
+        parts.append((idx, np.zeros_like(idx) + level, start,
+                      np.zeros(len(idx)) + cov))
+
+    i = np.flatnonzero(single)
+    emit(i, f, a_blk[i] << f, np.minimum(1.0, (hi[i] - lo[i] + 1) / block))
+    i = np.flatnonzero(head)
+    hs = a_blk[i] << f
+    emit(i, f, hs, (hs + block - lo[i]) / block)
+    i = np.flatnonzero(tail)
+    ts = b_blk[i] << f
+    emit(i, f, ts, (hi[i] - ts + 1) / block)
+    # the aligned middle [A, B), in floor blocks
+    A = np.where(head, a_blk + 1, a_blk)
+    B = np.where(tail, b_blk, b_blk + 1)
+    mid = np.flatnonzero(ok & ~single & (A < B))
+    A, B = A[mid], B[mid]
+    top = _floor_log2(A ^ B)        # highest bit where A and B differ
+    M = B >> top << top
+    bit = np.int64(1) << np.arange(log_n - f + 1, dtype=np.int64)
+    r, k = np.nonzero((M - A)[:, None] & bit)
+    emit(mid[r], k + f, (A[r] + ((M - A)[r] & (bit[k] - 1))) << f, 1.0)
+    r, k = np.nonzero((B - M)[:, None] & bit)
+    emit(mid[r], k + f, (M[r] + ((B - M)[r] >> k + 1 << k + 1)) << f, 1.0)
+    for r in np.flatnonzero((a <= b) & ~ok).tolist():
+        for lv, st, cv in canonical_cover(int(a[r]), int(b[r]), log_n, f):
+            emit(np.array([r]), lv, np.array([st], np.int64), cv)
+    idx, level, start, cov = (np.concatenate(c) for c in zip(*parts))
+    order = np.lexsort((start, idx))
+    return idx[order], level[order], start[order], cov[order]
+
+
+# up to this many rects, cover_2d_np builds each rect's cover_2d list:
+# for one or two rects (a single-placement query batch) that is about
+# half the cost of the batched form's fixed ~40 numpy calls
+SCALAR_COVER_RECTS = 4
+
+
 def cover_2d_np(rects, log_n: int, floor_k: int = 0):
     """Batch 2-D covers as numpy arrays: rects is an iterable of
     (x1, y1, x2, y2); returns (rect_idx, kx, ky, cx, cy, coverage)
-    int64/float64 arrays. Same elements as cover_2d per rect (asserted
-    in tests) — the per-axis covers stay tiny Python (<= 2 log n
-    intervals), but the cross product and row materialization are
-    vectorized, which is what the large-batch query planner pays per
-    rect (the per-element list-append form costs ~1 ms/rect; this is
-    ~10x cheaper)."""
-    idxs, kxs, kys, cxs, cys, covs = [], [], [], [], [], []
-    for i, (x1, y1, x2, y2) in enumerate(rects):
-        xs = canonical_cover(int(x1), int(x2), log_n, floor_k)
-        ys = canonical_cover(int(y1), int(y2), log_n, floor_k)
-        if not xs or not ys:
-            continue
-        xk = np.fromiter((k for k, _, _ in xs), np.int64, len(xs))
-        xc = np.fromiter((s >> k for k, s, _ in xs), np.int64, len(xs))
-        xv = np.fromiter((c for _, _, c in xs), np.float64, len(xs))
-        yk = np.fromiter((k for k, _, _ in ys), np.int64, len(ys))
-        yc = np.fromiter((s >> k for k, s, _ in ys), np.int64, len(ys))
-        yv = np.fromiter((c for _, _, c in ys), np.float64, len(ys))
-        nx, ny = len(xs), len(ys)
-        kxs.append(np.repeat(xk, ny)); cxs.append(np.repeat(xc, ny))
-        kys.append(np.tile(yk, nx));   cys.append(np.tile(yc, nx))
-        covs.append(np.repeat(xv, ny) * np.tile(yv, nx))
-        idxs.append(np.full(nx * ny, i, dtype=np.int64))
-    if not idxs:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z, z, z, z, np.zeros(0, dtype=np.float64)
-    return (np.concatenate(idxs), np.concatenate(kxs),
-            np.concatenate(kys), np.concatenate(cxs),
-            np.concatenate(cys), np.concatenate(covs))
+    int64/float64 arrays, grouped by rect in input order. Same elements,
+    in the same order, as cover_2d per rect (asserted in tests): past
+    ``SCALAR_COVER_RECTS`` rects the per-axis covers come from
+    ``canonical_cover_np`` for all rects at once and the per-rect cross
+    products from one index expansion, so the cost is a fixed number of
+    numpy calls rather than a Python loop per rect."""
+    r = np.asarray(list(rects), np.int64).reshape(-1, 4)
+    nr = len(r)
+    if nr <= SCALAR_COVER_RECTS:
+        rows = np.array([(i, *e) for i, q in enumerate(r.tolist())
+                         for e in cover_2d(*q, log_n, floor_k, floor_k)],
+                        np.float64).reshape(-1, 6)
+        # every int column is far below 2^53, so float64 holds it exactly
+        ints = rows[:, :5].T.astype(np.int64, order="C")
+        return (*ints, rows[:, 5].copy())
+    # both axes in one call: ranges [0, nr) are x, [nr, 2 nr) are y
+    i, k, s, c = canonical_cover_np(np.concatenate([r[:, 0], r[:, 1]]),
+                                    np.concatenate([r[:, 2], r[:, 3]]),
+                                    log_n, floor_k)
+    per_axis = np.bincount(i, minlength=2 * nr)
+    first = np.cumsum(per_axis) - per_axis      # first element per range
+    nx, ny = per_axis[:nr], per_axis[nr:]
+    cnt = nx * ny
+    ridx = np.repeat(np.arange(nr, dtype=np.int64), cnt)
+    # position of each output row within its rect's nx x ny block
+    off = np.arange(len(ridx), dtype=np.int64) - np.repeat(
+        np.cumsum(cnt) - cnt, cnt)
+    ex = first[ridx] + off // ny[ridx]
+    ey = first[nr + ridx] + off % ny[ridx]
+    kx, ky = k[ex], k[ey]
+    return ridx, kx, ky, s[ex] >> kx, s[ey] >> ky, c[ex] * c[ey]
 
 
 def effective_cover(x1: int, y1: int, x2: int, y2: int, log_n: int,

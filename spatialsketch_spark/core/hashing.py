@@ -38,13 +38,6 @@ def hash_items(items: np.ndarray, coeffs: np.ndarray, width: int) -> np.ndarray:
     return ((a * items[None, :] + b) % MERSENNE_P) % width
 
 
-def hash_identity(items: np.ndarray, d: int, width: int) -> np.ndarray:
-    """Exact-mode 'hash': identity mod width, replicated d times.
-    Collision-free when the item domain <= width."""
-    items = np.asarray(items, dtype=np.int64) % width
-    return np.broadcast_to(items[None, :], (d, len(items))).copy()
-
-
 def trailing_zeros(v: np.ndarray) -> np.ndarray:
     """Vectorized count of trailing zero bits (FM.cpp:80-90); tz(0) = 0
     to match the reference's loop, which returns 0 for input 0."""

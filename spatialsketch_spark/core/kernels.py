@@ -90,9 +90,6 @@ class BaseKernel:
     def merge(self, states: list):
         raise NotImplementedError
 
-    def size_bytes(self, state) -> int:
-        return len(self.serialize(state))
-
 
 class ExactKernel(BaseKernel):
     """Collision-free synopsis: the exact per-cell event arrays.
@@ -246,19 +243,43 @@ class CMKernel(BaseKernel):
 
     def deserialize_batch(self, payloads) -> np.ndarray:
         """B payloads -> one (B, d, w) int64 counter stack; the batched
-        probe then answers every (row, item) in one fancy-index."""
-        out = np.zeros((len(payloads), self.d, self.w), dtype=np.int64)
-        flat = out.reshape(len(payloads), self.d * self.w)
-        for i, blob in enumerate(payloads):
-            if blob[:8] == self._MAGIC_S:
-                self._check_shape(blob)
-                nnz = int(np.frombuffer(blob, np.int64, 1, 24)[0])
-                idx = np.frombuffer(blob, np.int64, nnz, 32)
-                flat[i, idx] = np.frombuffer(blob, np.int64, nnz,
-                                             32 + 8 * nnz)
-            else:
-                flat[i, :] = self.deserialize(blob).ravel()
-        return out
+        probe then answers every (row, item) in one fancy-index.
+
+        Raw payloads are whole int64 words, so they are parsed from ONE
+        joined buffer through their header offsets — no per-blob
+        Python. Anything else (legacy pickle) goes through
+        ``deserialize``."""
+        blobs = list(payloads)
+        n, dw = len(blobs), self.d * self.w
+        flat = np.zeros((n, dw), dtype=np.int64)
+        lens = np.fromiter(map(len, blobs), np.int64, n)
+        cand = np.flatnonzero((lens >= 24) & (lens % 8 == 0))
+        raw = cand[:0]
+        if len(cand):
+            words = np.frombuffer(b"".join([blobs[i] for i in cand]),
+                                  np.int64)
+            starts = np.cumsum(lens[cand]) // 8 - lens[cand] // 8
+            dense = words[starts] == np.frombuffer(self._MAGIC_D,
+                                                   np.int64)[0]
+            sparse = words[starts] == np.frombuffer(self._MAGIC_S,
+                                                    np.int64)[0]
+            bad = (dense | sparse) & ((words[starts + 1] != self.d)
+                                      | (words[starts + 2] != self.w))
+            if bad.any():
+                self._check_shape(blobs[cand[np.argmax(bad)]])
+            s = starts[dense] + 3
+            flat[cand[dense]] = words[s[:, None] + np.arange(dw)]
+            # sparse: nnz at word 3, then nnz indices, then nnz values
+            s = starts[sparse] + 4
+            nnz = words[s - 1]
+            at = (np.repeat(s - np.cumsum(nnz) + nnz, nnz)
+                  + np.arange(int(nnz.sum())))
+            flat[np.repeat(cand[sparse], nnz), words[at]] = \
+                words[at + np.repeat(nnz, nnz)]
+            raw = cand[dense | sparse]
+        for i in np.setdiff1d(np.arange(n), raw).tolist():
+            flat[i] = self.deserialize(blobs[i]).ravel()
+        return flat.reshape(n, self.d, self.w)
 
     def query_items_batch(self, counters: np.ndarray,
                           items: np.ndarray) -> np.ndarray:
@@ -1000,6 +1021,15 @@ class DCMKernel(BaseKernel):
         bit-identical: grouped sums are exact int64, bincount partial
         sums are integers < 2^53 in float64, and per-cell prefix lists
         come out sorted exactly as np.unique produced them before."""
+        # the combined (cell, prefix) key below holds a level-lvl prefix
+        # in L+1-lvl bits; an item outside [0, 2^(L+1)) would carry into
+        # the cell part and alias another cell's counts
+        if len(items) and (items.min() < 0
+                           or items.max() >= (1 << (self.L + 1))):
+            raise ValueError(
+                f"dyadic-CM items must lie in [0, 2^{self.L + 1}); got "
+                f"[{int(items.min())}, {int(items.max())}] — raise the "
+                "config's item_domain")
         va = values.astype(np.int64)
         inv64 = inv.astype(np.int64)
         n_cells = len(uc)

@@ -117,12 +117,6 @@ def _truth(spark, sf_dir, probes, item_col=True, t0_col=False,
         "qid", F.coalesce("truth", F.lit(0)).alias("truth"))
 
 
-def _ok(est: DataFrame, truth: DataFrame, ok_col) -> DataFrame:
-    return (est.join(truth, "qid")
-            .select("qid", ok_col.cast("bigint").alias("ok"))
-            .orderBy("qid"))
-
-
 # --- CM frequency ----------------------------------------------------------
 
 CM_PROBES = [(RECTS[0], 3, -1), (RECTS[1], 17, -1),

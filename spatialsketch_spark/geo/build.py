@@ -242,6 +242,99 @@ def build_sketch_df(events: DataFrame, cfg: SketchConfig, kind: str,
         .mapInPandas(_merge_partitions(cfg, kind), schema=SKETCH_SCHEMA)
 
 
+class ServeIndex:
+    """Driver-side serving index: summed-area tables over the finest
+    live grid ``(level, level)`` — the prefix-sum cube of Ho, Agrawal,
+    Megiddo & Srikant, "Range Queries in OLAP Data Cubes" (SIGMOD 1997).
+
+    ``vs`` holds prefix sums of ``val_sum``, shape (nf+1, nf+1);
+    ``cm`` (non-exact CM stores only, else None) holds per-(row, slot)
+    prefix sums of the Count-Min counters, shape (nf+1, nf+1, d, w).
+    Both synopses are linear — every coarser cell equals the sum of
+    its finest-grid children, bit for bit — so any cover cell
+    ``(kx, ky, cx, cy)`` is one 4-corner box sum over the finest-grid
+    rectangle ``[cx << (kx-level), (cx+1) << (kx-level)) x [...)``."""
+
+    def __init__(self, level: int, vs: np.ndarray,
+                 cm: np.ndarray | None = None):
+        self.level = level
+        self.vs = vs
+        self.cm = cm
+
+    @property
+    def nbytes(self) -> int:
+        return self.vs.nbytes + (0 if self.cm is None else self.cm.nbytes)
+
+    @staticmethod
+    def has_cm(cfg: SketchConfig, kind: str) -> bool:
+        return kind == "cm" and not cfg.exact
+
+    @classmethod
+    def table_bytes(cls, cfg: SketchConfig, kind: str, level: int) -> int:
+        slots = 1 + (cfg.cm_depth * cfg.cm_width
+                     if cls.has_cm(cfg, kind) else 0)
+        return ((cfg.n >> level) + 1) ** 2 * slots * 8
+
+    @classmethod
+    def from_df(cls, df: DataFrame, cfg: SketchConfig, kind: str,
+                level: int) -> "ServeIndex | None":
+        """Collect the finest grid's rows (one job) and build the
+        tables; None when those rows are not one per in-range cell, the
+        shape every build and merge writes."""
+        cm = cls.has_cm(cfg, kind)
+        tbl = (df.where(F.col("grid_key") == cfg.grid_key(level, level))
+               .select("cell", "val_sum", *(["payload"] if cm else []))
+               .toArrow())
+        cells = tbl.column("cell").to_numpy()
+        fx, fy = cells // cfg.n, cells % cfg.n
+        nf = cfg.n >> level
+        if (len(np.unique(cells)) < len(cells)
+                or ((fx < 0) | (fx >= nf) | (fy >= nf)).any()):
+            return None
+
+        def sat(vals: np.ndarray) -> np.ndarray:
+            t = np.zeros((nf + 1, nf + 1) + vals.shape[1:], np.int64)
+            t[fx + 1, fy + 1] = vals
+            np.cumsum(t, axis=0, out=t)
+            return np.cumsum(t, axis=1, out=t)
+
+        vs = sat(tbl.column("val_sum").to_numpy())
+        if not cm:
+            return cls(level, vs)
+        counters = make_kernel("cm", cfg).deserialize_batch(
+            tbl.column("payload").to_pylist())
+        return cls(level, vs, sat(counters))
+
+    def _corners(self, kx, ky, cx, cy) -> list[np.ndarray]:
+        """Flat (x, y) indices into an (nf+1, nf+1) table of each cover
+        cell's box corners, in +, -, -, + order."""
+        sx, sy = kx - self.level, ky - self.level
+        x0, x1 = cx << sx, (cx + 1) << sx
+        y0, y1 = cy << sy, (cy + 1) << sy
+        side = self.vs.shape[1]
+        return [x1 * side + y1, x0 * side + y1, x1 * side + y0,
+                x0 * side + y0]
+
+    @staticmethod
+    def _box(flat: np.ndarray, corners) -> np.ndarray:
+        a, b, c, d = (flat.take(i) for i in corners)
+        return a - b - c + d
+
+    def counts(self, kx, ky, cx, cy) -> np.ndarray:
+        """Per cover cell: the cell's exact ``val_sum``."""
+        return self._box(self.vs.reshape(-1),
+                         self._corners(kx, ky, cx, cy))
+
+    def freqs(self, kx, ky, cx, cy, slots: np.ndarray) -> np.ndarray:
+        """Per cover cell e: min over rows r of the cell's CM counter
+        at ``slots[e, r]`` (the item's hash in row r)."""
+        d, w = self.cm.shape[2:]
+        within = np.arange(d) * w + slots               # (cells, d)
+        corners = [(i * (d * w))[:, None] + within
+                   for i in self._corners(kx, ky, cx, cy)]
+        return self._box(self.cm.reshape(-1), corners).min(axis=1)
+
+
 class SketchStore:
     """A built sketch table + its manifest (config, lineage, metrics).
 
@@ -270,6 +363,7 @@ class SketchStore:
         self.manifest = manifest or {}
         self.path = path
         self._bucketed = None
+        self._serve = None
 
     def bucketed_df(self) -> DataFrame:
         """The sketch table hash-partitioned by its join key (grid_key,
@@ -284,6 +378,43 @@ class SketchStore:
             self._bucketed = self.df.repartition(
                 p, "grid_key", "cell").cache()
         return self._bucketed
+
+    # driver memory budget for the serving index's tables; a store
+    # whose tables would pass it keeps the Spark query path (a
+    # min_level=0 CM store at N=4096 would need ~11 GB)
+    SERVE_INDEX_BYTES = 256 << 20
+
+    # True when ``df`` may hold several partial rows per (grid_key,
+    # cell) — a streaming view over uncompacted batches. The Spark path
+    # estimates each partial row separately, which a table of merged
+    # cells cannot reproduce, so such stores get no serving index.
+    cell_partials = False
+
+    def serve_index(self) -> ServeIndex | None:
+        """The driver-side serving index of ``self.df`` (None: this
+        store keeps the Spark path). Built on first use and memoized
+        against the DataFrame it was built from — reassigning ``df``
+        rebuilds it, so a stale index is never served."""
+        if self._serve is None or self._serve[0] is not self.df:
+            m = self.min_level
+            ok = (not self.cell_partials
+                  and (m, m) not in self.cfg.dropped_grids
+                  and ServeIndex.table_bytes(self.cfg, self.kind, m)
+                  <= self.SERVE_INDEX_BYTES)
+            self._serve = (self.df, ServeIndex.from_df(
+                self.df, self.cfg, self.kind, m) if ok else None)
+        return self._serve[1]
+
+    def _record_serve_index(self) -> None:
+        """Build the serving index now and report its cold cost in the
+        manifest (``serve_index_s``; ``serve_index_bytes`` = 0 when the
+        store keeps the Spark path)."""
+        t0 = time.time()
+        idx = self.serve_index()
+        self.manifest["metrics"].update({
+            "serve_index_s": round(time.time() - t0, 3),
+            "serve_index_bytes": idx.nbytes if idx is not None else 0,
+        })
 
     # -- construction ------------------------------------------------
     @classmethod
@@ -333,11 +464,13 @@ class SketchStore:
                 "build_mode": mode,
             },
         }
+        store = cls(spark, df, cfg, kind, min_level, manifest, path)
+        store._record_serve_index()
         if path:
             manifest["snapshot_seq"] = 0
             manifest["data_dir"] = "sketch"
             cls._commit_manifest(path, manifest)
-        return cls(spark, df, cfg, kind, min_level, manifest, path)
+        return store
 
     @staticmethod
     def _commit_manifest(path: str, manifest: dict) -> None:
@@ -542,11 +675,13 @@ class SketchStore:
             f"merge_s{seq}_wall_s": round(time.time() - t0, 3),
             f"merge_s{seq}_delta_events": delta_fp["n_events"],
         })
+        store = SketchStore(spark, merged, self.cfg, self.kind,
+                            self.min_level, manifest, self.path)
+        store._record_serve_index()
         if self.path:
             manifest["data_dir"] = data_dir
             self._commit_manifest(self.path, manifest)
-        return SketchStore(spark, merged, self.cfg, self.kind,
-                           self.min_level, manifest, self.path)
+        return store
 
     def rollback(self, to_seq: int) -> "SketchStore":
         """Iceberg rollback: make snapshot ``to_seq`` current again by

@@ -65,8 +65,3 @@ def derive_geo_events(spark: SparkSession, sf_dir: str, n: int,
     if spread:
         df = df.repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
     return df
-
-
-def oracle_geo_cte(n: int) -> str:
-    """DuckDB-side CTE text for oracle queries: WITH geo AS (...)."""
-    return f"WITH geo AS ({geo_events_sql(n)})"

@@ -34,19 +34,6 @@ def summarize_errors(results: DataFrame) -> dict:
             for k in ("errRel", "errN", "errL1")} | {"n": int(row["n"])}
 
 
-def write_query_stats(path: str, rows: list[dict]) -> None:
-    """Per-query statistics sink (reference StatisticsWriter,
-    Statistics.cpp:6-123 — 23-column CSV); ours is JSON-lines with the
-    same content class: query geometry, estimates, ground truth,
-    normalized errors, timings."""
-    import json
-    import os
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        for r in rows:
-            f.write(json.dumps(r, sort_keys=True) + "\n")
-
-
 def membership_confusion(results: DataFrame) -> dict:
     """results: (est in {0,1}, expected_member in {0,1}) ->
     FPR/FNR/precision/recall/F1 (experiments.cpp:846-873)."""

@@ -27,6 +27,23 @@ Query kinds and their reference semantics:
 
 The ``exact`` kernel answers every kind exactly (collision-free mode) —
 that is what the DuckDB oracle gate exercises.
+
+Serving index (``query_values`` only): a store built by
+``SketchStore.build`` / ``merge_events`` carries driver-side
+summed-area tables over its finest live grid (``build.ServeIndex``) —
+``val_sum`` on every store, plus per-(row, slot) Count-Min counters on
+non-exact CM stores. ``query_values`` answers every 'count', and every
+'freq' on such a CM store, from them in numpy with no Spark job: each
+cover cell (same cover as the Spark path) is a 4-corner box sum, a CM
+cell estimate is the min over rows of the box-summed counter at the
+item's slot, and each cell contributes trunc(coverage * estimate), so
+answers are bit-identical to the Spark path. Stores opened any other way
+(``load``, ``rollback``, streaming ``as_store()``) build the index on
+their first ``query_values``; reassigning ``store.df`` rebuilds it. A
+store whose tables would pass ``SketchStore.SERVE_INDEX_BYTES``, whose
+finest grid is dropped, or whose table holds per-cell partials (an
+uncompacted streaming view) keeps the Spark path. The manifest records
+the cold cost as ``metrics.serve_index_s`` / ``serve_index_bytes``.
 """
 
 from __future__ import annotations
@@ -37,15 +54,44 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..core.dyadic import effective_cover
+from ..core.dyadic import cover_2d_np, effective_cover
 from ..core.kernels import int_group_sum, make_kernel
 from ..core.partitioner import Shape, shape_to_ranges
-from .build import SketchStore
+from .build import ServeIndex, SketchStore
 
 COVER_SCHEMA = "pid BIGINT, grid_key INT, cell BIGINT, coverage DOUBLE"
 QMAP_SCHEMA = ("pid BIGINT, qid BIGINT, qkind STRING, item BIGINT, "
                "item_end BIGINT, t0 BIGINT")
 RESULT_SCHEMA = "qid BIGINT, est BIGINT"
+
+
+# qkind -> the kernels that answer it (None: any kernel — 'count' reads
+# the val_sum column). query(), query_values() and the serving index
+# all validate against this one table.
+QKIND_KERNELS = {
+    "count": None,
+    "freq": {"exact", "cm", "ecm", "elastic"},
+    "range_freq": {"exact", "dcm"},
+    "window": {"exact", "ecm"},
+    "window_merge": {"exact", "ecm"},
+    "distinct": {"exact", "fm"},
+    "member": {"exact", "bf"},
+    "l2": {"exact", "cm"},
+}
+# summed over cells (coverage-scaled); the rest merge cell states first
+ADDITIVE_QKINDS = ("count", "freq", "range_freq", "window")
+
+
+def _check_cm_specs(items, item_ends, t0s) -> None:
+    """CMKernel.query_item's guards over a batch: a malformed QuerySpec
+    fails loudly on every batch surface, not just the scalar one
+    (item_end == item is a degenerate point freq, accepted)."""
+    if ((item_ends >= 0) & (item_ends != items)).any():
+        raise ValueError("CM answers point frequencies only; item "
+                         "ranges need a 'dcm' (or exact-mode) store")
+    if (t0s > 0).any():
+        raise ValueError("CM has no time dimension; window queries "
+                         "need an 'ecm' (or exact-mode) store")
 
 
 @dataclass
@@ -137,15 +183,7 @@ def _additive_batch_ests(kernel, pdf: pd.DataFrame) -> np.ndarray:
     payloads = pdf["payload"]
     n = len(pdf)
     if kernel.kind == "cm":
-        # mirror CMKernel.query_item's guards so a malformed QuerySpec
-        # fails loudly on the batch path too, not just the scalar one
-        bad_range = (iends >= 0) & (iends != items)
-        if bad_range.any():
-            raise ValueError("CM answers point frequencies only; item "
-                             "ranges need a 'dcm' (or exact-mode) store")
-        if (t0s > 0).any():
-            raise ValueError("CM has no time dimension; window queries "
-                             "need an 'ecm' (or exact-mode) store")
+        _check_cm_specs(items, iends, t0s)
         counters = kernel.deserialize_batch(payloads)
         return kernel.query_items_batch(counters, items)
     if kernel.kind == "exact":
@@ -298,18 +336,8 @@ def _pid_additive_estimator(cfg, kind: str, qmeta: dict):
             ncnt = ~g_is_cnt
             if ncnt.any():
                 if kernel.kind == "cm":
-                    # mirror _additive_batch_ests' dispatch guards
-                    # exactly: item_end == item is a degenerate point
-                    # freq, accepted on both surfaces
-                    _ie = f_iends[qpos[ncnt]]
-                    if ((_ie >= 0) & (_ie != f_items[qpos[ncnt]])).any():
-                        raise ValueError(
-                            "CM answers point frequencies only; item "
-                            "ranges need a 'dcm' (or exact-mode) store")
-                    if (f_t0s[qpos[ncnt]] > 0).any():
-                        raise ValueError(
-                            "CM has no time dimension; window queries "
-                            "need an 'ecm' (or exact-mode) store")
+                    _check_cm_specs(f_items[qpos[ncnt]],
+                                    f_iends[qpos[ncnt]], f_t0s[qpos[ncnt]])
                     # deserialize each referenced cell ONCE (count-only
                     # placements carry NULL payloads and are never
                     # referenced here)
@@ -401,56 +429,55 @@ class SpatialSketchEngine:
     # distributed expansion job it replaces (~1 s at any size)
     DRIVER_COVER_RECTS = 8192
 
+    def _cover_np(self, pid_ranges: list):
+        """Driver-side cover of ``[(pid, ranges)]`` -> (pid, kx, ky, cx,
+        cy, coverage) arrays, grouped by pid in input order: numpy
+        cross-product covers when no grids are dropped, the
+        effective_cover rewrite otherwise."""
+        cfg = self.store.cfg
+        log_n, floor_k = cfg.levels - 1, self.store.min_level
+        if not cfg.dropped_grids:
+            rects = [r for _, rs in pid_ranges for r in rs]
+            pids = np.fromiter((pid for pid, rs in pid_ranges for _ in rs),
+                               np.int64, len(rects))
+            ridx, kx, ky, cx, cy, cov = cover_2d_np(rects, log_n, floor_k)
+            return pids[ridx], kx, ky, cx, cy, cov
+        rows = [(pid,) + e for pid, rs in pid_ranges
+                for (x1, y1, x2, y2) in rs
+                for e in effective_cover(x1, y1, x2, y2, log_n,
+                                         cfg.dropped_grids, floor_k)]
+        cols = list(zip(*rows)) or [()] * 6
+        return (*(np.asarray(c, np.int64) for c in cols[:5]),
+                np.asarray(cols[5], np.float64))
+
     def _cover_df(self, pid_ranges: list):
         """pid-keyed cover DataFrame over ``[(pid, ranges)]`` — NO
         per-query metadata: queries sharing a rect-set (e.g. a count
         and a freq probe of the same placement) expand and broadcast
         their cover ONCE; qid/qkind/item/t0 ride the tiny broadcast
         qid-map that ``_matched`` joins on pid afterwards. Small/medium
-        batches: computed on the driver — numpy cross-product covers
-        when no grids are dropped, the effective_cover rewrite
-        otherwise. Very large batches: the per-query bit arithmetic is
-        fanned out via mapInPandas so cover *throughput* scales with
-        executors, not driver cores."""
+        batches: computed on the driver (``_cover_np``). Very large
+        batches: the per-query bit arithmetic is fanned out via
+        mapInPandas so cover *throughput* scales with executors, not
+        driver cores."""
         spark = self.store.spark
         cfg = self.store.cfg
         n_rects = sum(len(rs) for _, rs in pid_ranges)
         if n_rects <= self.DRIVER_COVER_RECTS:
-            if not cfg.dropped_grids:
-                from ..core.dyadic import cover_2d_np
-                rects, pids = [], []
-                for pid, rs in pid_ranges:
-                    for r in rs:
-                        rects.append(r)
-                        pids.append(pid)
-                ridx, kx, ky, cx, cy, cov = cover_2d_np(
-                    rects, cfg.levels - 1, self.store.min_level)
-                # pyarrow Table, straight from the numpy arrays: skips
-                # the pandas block consolidation AND the row-based py4j
-                # conversion — measured ~2x faster plan assembly than
-                # createDataFrame(pandas) at cover sizes (the dominant
-                # fresh-batch floor component, PLANS.md)
-                import pyarrow as pa
-                tbl = pa.table({
-                    "pid": np.asarray(pids, dtype=np.int64)[ridx],
-                    "grid_key": (kx + ky * cfg.levels).astype(np.int32),
-                    "cell": (cx * cfg.n + cy).astype(np.int64),
-                    "coverage": cov.astype(np.float64),
-                })
-                return spark.createDataFrame(tbl, schema=COVER_SCHEMA)
-            else:
-                rows = []
-                log_n = cfg.levels - 1
-                for pid, rs in pid_ranges:
-                    for (x1, y1, x2, y2) in rs:
-                        for kx, ky, cx, cy, cov in effective_cover(
-                                x1, y1, x2, y2, log_n, cfg.dropped_grids,
-                                floor_k=self.store.min_level):
-                            rows.append((pid, cfg.grid_key(kx, ky),
-                                         cx * cfg.n + cy, float(cov)))
-                cover_pdf = pd.DataFrame(
-                    rows, columns=["pid", "grid_key", "cell", "coverage"])
-            return spark.createDataFrame(cover_pdf, schema=COVER_SCHEMA)
+            pid, kx, ky, cx, cy, cov = self._cover_np(pid_ranges)
+            # pyarrow Table, straight from the numpy arrays: skips
+            # the pandas block consolidation AND the row-based py4j
+            # conversion — measured ~2x faster plan assembly than
+            # createDataFrame(pandas) at cover sizes (the dominant
+            # fresh-batch floor component, PLANS.md)
+            import pyarrow as pa
+            tbl = pa.table({
+                "pid": pid,
+                "grid_key": (kx + ky * cfg.levels).astype(np.int32),
+                "cell": (cx * cfg.n + cy).astype(np.int64),
+                "coverage": cov.astype(np.float64),
+            })
+            return spark.createDataFrame(tbl, schema=COVER_SCHEMA)
         # distributed: ship (pid, rect) rows, expand per partition
         rect_rows = [(pid, x1, y1, x2, y2)
                      for pid, rs in pid_ranges
@@ -467,7 +494,6 @@ class SpatialSketchEngine:
         levels = cfg.levels
 
         def expand(batches):
-            from ..core.dyadic import cover_2d_np
             for pdf in batches:
                 if not len(pdf):
                     continue
@@ -544,6 +570,22 @@ class SpatialSketchEngine:
             return None
         return max(1, -(-int(cells) // self.CELLS_PER_SCAN_TASK))
 
+    @staticmethod
+    def _placements(queries: list[QuerySpec]):
+        """Dedup identical rect-sets: -> ([(pid, ranges)], pid per
+        query), so a count and a freq on one placement expand ONE
+        cover."""
+        groups: dict[tuple, int] = {}
+        pid_ranges: list = []
+        pid_of = []
+        for q in queries:
+            pid = groups.setdefault(tuple(map(tuple, q.ranges)),
+                                    len(pid_ranges))
+            if pid == len(pid_ranges):
+                pid_ranges.append((pid, q.ranges))
+            pid_of.append(pid)
+        return pid_ranges, pid_of
+
     def _matched_pids(self, queries: list[QuerySpec]):
         """Payload-bearing matched rows at PLACEMENT granularity:
         dedup identical rect-sets (e.g. the count and the freq probe
@@ -553,18 +595,9 @@ class SpatialSketchEngine:
         cols), qmap_rows) — per-query metadata attachment is the
         caller's choice (broadcast join for the DataFrame path, a
         python-side expansion for query_values)."""
-        groups: dict[tuple, int] = {}
-        pid_ranges: list = []
-        qmap_rows = []
-        for q in queries:
-            key = tuple(map(tuple, q.ranges))
-            pid = groups.get(key)
-            if pid is None:
-                pid = len(pid_ranges)
-                groups[key] = pid
-                pid_ranges.append((pid, q.ranges))
-            qmap_rows.append((pid, q.qid, q.qkind, q.item,
-                              q.item_end, q.t0))
+        pid_ranges, pid_of = self._placements(queries)
+        qmap_rows = [(pid, q.qid, q.qkind, q.item, q.item_end, q.t0)
+                     for pid, q in zip(pid_of, queries)]
         cover = self._cover_df(pid_ranges)
         if len(queries) < 64:
             # precise grid_key pruning list, driver-computed
@@ -611,6 +644,18 @@ class SpatialSketchEngine:
         qmap = spark.createDataFrame(qmap_rows, schema=QMAP_SCHEMA)
         return m.join(F.broadcast(qmap), "pid").drop("pid")
 
+    def _check_kinds(self, queries: list[QuerySpec]) -> None:
+        kind = "exact" if self.store.cfg.exact else self.store.kind
+        for q in queries:
+            if q.qkind not in QKIND_KERNELS:
+                raise ValueError(f"unknown query kind {q.qkind!r}")
+            allowed = QKIND_KERNELS[q.qkind]
+            if allowed is not None and kind not in allowed:
+                raise ValueError(
+                    f"query kind {q.qkind!r} is not answerable by a "
+                    f"{self.store.kind!r} store (needs one of "
+                    f"{sorted(allowed)})")
+
     def query(self, queries: list[QuerySpec]) -> DataFrame:
         """-> DataFrame(qid, est); missing-cell-safe (untouched cells
         contribute 0, the analogue of lazily-unallocated sketches).
@@ -635,31 +680,12 @@ class SpatialSketchEngine:
         dispatching e.g. a range_freq at a plain-CM store would
         otherwise silently return point-frequency estimates.
         """
-        _QKIND_KERNELS = {
-            "count": None,                        # val_sum column, any kernel
-            "freq": {"exact", "cm", "ecm", "elastic"},
-            "range_freq": {"exact", "dcm"},
-            "window": {"exact", "ecm"},
-            "window_merge": {"exact", "ecm"},
-            "distinct": {"exact", "fm"},
-            "member": {"exact", "bf"},
-            "l2": {"exact", "cm"},
-        }
-        kind = "exact" if self.store.cfg.exact else self.store.kind
-        for q in queries:
-            allowed = _QKIND_KERNELS.get(q.qkind, ())
-            if allowed is not None and kind not in (allowed or ()):
-                raise ValueError(
-                    f"query kind {q.qkind!r} is not answerable by a "
-                    f"{self.store.kind!r} store (needs one of "
-                    f"{sorted(allowed) if allowed else '?'})")
+        self._check_kinds(queries)
         spark = self.store.spark
         counts = [q for q in queries if q.qkind == "count"]
         additive = [q for q in queries
-                    if q.qkind in ("freq", "range_freq", "window")]
-        mergeful = [q for q in queries
-                    if q.qkind in ("distinct", "member", "l2",
-                                   "window_merge")]
+                    if q.qkind in ADDITIVE_QKINDS and q.qkind != "count"]
+        mergeful = [q for q in queries if q.qkind not in ADDITIVE_QKINDS]
         # ONE cover + ONE sketch join for the whole batch; the per-class
         # consumers below filter on qkind. Their shared subtree (cover
         # expansion + broadcast + join) is canonically identical, so
@@ -714,50 +740,86 @@ class SpatialSketchEngine:
                 .select("qid", F.coalesce("est", F.lit(0)).alias("est")))
 
     def query_values(self, queries: list[QuerySpec]) -> dict:
-        """Low-latency batch answers -> {qid: est} (VERDICT r4 task 2).
+        """Low-latency batch answers -> {qid: est}; same answers as
+        ``query()`` (asserted equal in tests/test_plans.py).
 
-        Same semantics as ``query()`` (asserted equal in
-        tests/test_plans.py), but the per-partition additive partials
-        — at most |queries| x #partitions tiny (qid, est) rows — are
-        collected and folded on the DRIVER instead of flowing through
-        a groupBy shuffle plus a qid-fill broadcast join. A fresh
-        600-query batch drops from ~1.45 s to ~0.9 s on the sandbox
-        (each batch sheds one shuffle stage, one broadcast exchange
-        and one job; profiled in scripts/profile_prepared_batch.py).
-
-        Scale posture: the driver fold is O(|queries|) — exactly the
-        size of the answer the caller receives either way (the
-        reference's query API returns the same, SpatialSketch.cpp:
-        837-855); no payload or per-cell row is ever collected. Merge
-        kinds (distinct/member/l2/window_merge) need their cross-cell
-        shuffle regardless and fall through to ``query()``.
-        ``query()`` remains the DataFrame surface for SQL-integrated
-        consumers (the driver gate included)."""
-        additive = [q for q in queries
-                    if q.qkind in ("freq", "range_freq", "window",
-                                   "count")]
+        Three routes, by (store, qkind):
+        - the store's serving index (``SketchStore.serve_index``), when
+          it has one: every 'count', and every 'freq' on a non-exact CM
+          store, answered in numpy on the DRIVER — no Spark job;
+        - other additive kinds (freq / range_freq / window): the
+          per-partition additive partials — at most |queries| x
+          #partitions tiny (qid, est) rows — are collected and folded
+          on the driver instead of flowing through a groupBy shuffle
+          plus a qid-fill broadcast join. No payload or per-cell row is
+          ever collected;
+        - merge kinds (distinct/member/l2/window_merge) need their
+          cross-cell shuffle regardless and fall through to
+          ``query()``, the DataFrame surface for SQL-integrated
+          consumers (the driver gate included)."""
+        self._check_kinds(queries)
+        indexed = ({"count", "freq"} if ServeIndex.has_cm(
+            self.store.cfg, self.store.kind) else {"count"})
+        idx = None
+        if any(q.qkind in indexed for q in queries):
+            idx = self.store.serve_index()
+        served, additive, rest = [], [], []
+        for q in queries:
+            if idx is not None and q.qkind in indexed:
+                served.append(q)
+            elif q.qkind in ADDITIVE_QKINDS:
+                additive.append(q)
+            else:
+                rest.append(q)
         out: dict[int, int] = {}
-        if len(additive) < len(queries):
-            rest = [q for q in queries if q.qkind not in
-                    ("freq", "range_freq", "window", "count")]
+        if rest:
             for r in self.query(rest).collect():
                 out[int(r["qid"])] = int(r["est"])
-        if not additive:
-            return out
-        # re-validate through query()'s guard table by reusing its
-        # kind check (a range_freq at a plain-CM store must fail here
-        # too, not return garbage)
-        kind = "exact" if self.store.cfg.exact else self.store.kind
-        _allowed = {"count": None,
-                    "freq": {"exact", "cm", "ecm", "elastic"},
-                    "range_freq": {"exact", "dcm"},
-                    "window": {"exact", "ecm"}}
-        for q in additive:
-            allowed = _allowed[q.qkind]
-            if allowed is not None and kind not in allowed:
-                raise ValueError(
-                    f"query kind {q.qkind!r} is not answerable by a "
-                    f"{self.store.kind!r} store")
+        if served:
+            for q, v in zip(served, self._index_values(idx, served)):
+                out[q.qid] = out.get(q.qid, 0) + v
+        if additive:
+            for qid, v in self._spark_values(additive).items():
+                out[qid] = out.get(qid, 0) + v
+        return out
+
+    def _index_values(self, idx, queries: list[QuerySpec]) -> list[int]:
+        """Answers from the serving index, in query order. Each cover
+        cell contributes trunc(coverage * estimate) exactly as the
+        Spark estimators do (reference :766), so answers are
+        bit-identical; placements are deduped so a count and a freq on
+        one rect-set expand one cover."""
+        pid_ranges, pid_of = self._placements(queries)
+        pid, kx, ky, cx, cy, cov = self._cover_np(pid_ranges)
+        # pid-contiguous cover: placement p owns cells [lo[p], lo[p+1])
+        lo = np.searchsorted(pid, np.arange(len(pid_ranges) + 1))
+        pid_of = np.asarray(pid_of, np.int64)
+        is_cnt = np.array([q.qkind == "count" for q in queries], bool)
+        ests = np.zeros(len(queries), np.int64)
+        if is_cnt.any():
+            per_cell = np.floor(cov * idx.counts(kx, ky, cx, cy))
+            ests[is_cnt] = int_group_sum(
+                pid, per_cell, len(pid_ranges))[pid_of[is_cnt]]
+        fq = np.flatnonzero(~is_cnt)
+        if len(fq):
+            items = np.array([queries[i].item for i in fq], np.int64)
+            _check_cm_specs(
+                items, np.array([queries[i].item_end for i in fq], np.int64),
+                np.array([queries[i].t0 for i in fq], np.int64))
+            # expand (freq query, cover cell of its placement) pairs
+            a, b = lo[pid_of[fq]], lo[pid_of[fq] + 1]
+            n = b - a
+            qj = np.repeat(np.arange(len(fq)), n)
+            e = np.repeat(a - np.cumsum(n) + n, n) + np.arange(int(n.sum()))
+            slots = make_kernel("cm", self.store.cfg).hash(items).T[qj]
+            per_pair = np.floor(cov[e] * idx.freqs(kx[e], ky[e], cx[e],
+                                                   cy[e], slots))
+            ests[fq] = int_group_sum(qj, per_pair, len(fq))
+        return ests.tolist()
+
+    def _spark_values(self, additive: list[QuerySpec]) -> dict:
+        """Additive kinds through the Spark estimator, folded on the
+        driver."""
         # placement-granular matched rows: payloads cross Arrow once
         # per (distinct rect-set, cell); per-query metadata travels in
         # the estimator closure, so the qmap broadcast exchange
@@ -787,8 +849,7 @@ class SpatialSketchEngine:
             _pid_additive_estimator(self.store.cfg, self.store.kind,
                                     qmeta),
             schema=RESULT_SCHEMA)
-        for q in additive:
-            out[q.qid] = 0
+        out = {q.qid: 0 for q in additive}
         for r in partial.collect():
             out[int(r["qid"])] += int(r["est"])
         return out

@@ -409,17 +409,6 @@ _IVF_CACHE: dict = {}
 _IVF_CACHE_MAX = 4
 
 
-def clear_ivf_cache() -> None:
-    """Counterpart of clear_lsh_cache for the IVF index — call after
-    rewriting an embeddings source in place."""
-    while _IVF_CACHE:
-        _, (_, _, df, _) = _IVF_CACHE.popitem()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
 def _ivf_index(emb: DataFrame, n_centroids: int, n_iters: int,
                seed: int, train_fraction: float = 1.0):
     """(centroids, radii, assigned) where assigned = (vec_id, qv, n2,
@@ -1018,15 +1007,6 @@ enc AS (
                               ORDER BY d2, cid) AS rn
     FROM dist) WHERE rn = 1
 )"""
-
-
-def oracle_pq_encode(m: int = PQ_M, k: int = PQ_K,
-                     src: str = "embeddings") -> str:
-    return f"""
-WITH {_PQ_SQL.format(src=src, m=m, k=k)}
-SELECT vec_id, m, CAST(code AS BIGINT) AS code, CAST(d2 AS BIGINT) AS d2
-FROM enc ORDER BY vec_id, m
-"""
 
 
 def oracle_pq_topk(query_ids: list, topk: int = 5, m: int = PQ_M,

@@ -116,16 +116,21 @@ class StreamingSketch:
                     metas.append(json.load(f))
         return sorted(metas, key=lambda d: d["batch_id"])
 
-    def sketch_df(self) -> DataFrame:
-        """Current table = last compacted snapshot (if any) ∪ batch dirs
-        committed after it."""
+    def _parts(self) -> list[str]:
+        """Data dirs of the current table: the last compacted snapshot
+        (if any), then the batch dirs committed after it."""
         man = self._current_manifest()
         after = int(man.get("compacted_through_batch", -1))
         parts = []
         if "data_dir" in man:
             parts.append(f"{self.path}/{man['data_dir']}")
-        parts += [f"{self.batches_dir}/b{m['batch_id']}"
-                  for m in self._batch_metas(after)]
+        return parts + [f"{self.batches_dir}/b{m['batch_id']}"
+                        for m in self._batch_metas(after)]
+
+    def sketch_df(self, parts: list[str] | None = None) -> DataFrame:
+        """Current table = the union of ``_parts()``."""
+        if parts is None:
+            parts = self._parts()
         if not parts:
             return self.spark.createDataFrame([], SKETCH_SCHEMA)
         # snapshot dirs are partitioned by grid_key, batch dirs are flat
@@ -239,13 +244,18 @@ class StreamingSketch:
         the pre-unification view — merge_events works on it (in-memory:
         no path, so it never races the streaming table's own commits)."""
         fp, lineage, _ = self._accumulated_state()
-        return SketchStore(self.spark, self.sketch_df(), self.cfg,
-                           self.kind, self.min_level,
-                           manifest={"kind": self.kind,
-                                     "min_level": self.min_level,
-                                     "streaming": True,
-                                     "input_fingerprint": fp,
-                                     "lineage": lineage})
+        parts = self._parts()
+        store = SketchStore(self.spark, self.sketch_df(parts), self.cfg,
+                            self.kind, self.min_level,
+                            manifest={"kind": self.kind,
+                                      "min_level": self.min_level,
+                                      "streaming": True,
+                                      "input_fingerprint": fp,
+                                      "lineage": lineage})
+        # each part holds one merged row per cell; a union of several
+        # holds partials until compact() merges them
+        store.cell_partials = len(parts) > 1
+        return store
 
 
 def windowed_event_counts(stream_events: DataFrame, width_s: int,

@@ -134,3 +134,49 @@ def test_cover_2d_np_matches_scalar():
                              cx[m].tolist(), cy[m].tolist(),
                              cov[m].tolist()))
             assert got == want, (fk, r)
+
+
+@pytest.mark.parametrize("log_n", [0, 1, 3, 5])
+def test_canonical_cover_np_exhaustive(log_n):
+    """The vectorized per-axis cover equals canonical_cover element for
+    element and in order, for every range over [-2, n + 2) — ranges
+    partly or wholly outside the grid and empty ranges included — at
+    every floor_k."""
+    from spatialsketch_spark.core.dyadic import canonical_cover_np
+    n = 1 << log_n
+    pairs = [(a, b) for a in range(-2, n + 2) for b in range(-2, n + 2)]
+    a, b = np.array(pairs).T
+    for fk in range(log_n + 1):
+        idx, lv, st, cv = canonical_cover_np(a, b, log_n, fk)
+        got = list(zip(idx.tolist(), lv.tolist(), st.tolist(), cv.tolist()))
+        want = [(i, *e) for i, (x, y) in enumerate(pairs)
+                for e in canonical_cover(x, y, log_n, fk)]
+        assert got == want, fk
+
+
+def test_cover_2d_np_keeps_rect_and_product_order():
+    """cover_2d_np emits, rect by rect in input order, exactly the
+    cover_2d list (x-major product), with int64/float64 columns."""
+    from spatialsketch_spark.core.dyadic import cover_2d_np
+    rng = np.random.default_rng(11)
+    rects = [tuple(int(v) for v in r)
+             for r in rng.integers(-8, 4104, (400, 4))]
+    rects += [(5, 7, 5, 7), (9, 0, 3, 10), (0, 0, 4095, 4095)]
+    for fk in (0, 2, 4):
+        ridx, kx, ky, cx, cy, cov = cover_2d_np(rects, 12, fk)
+        assert [a.dtype for a in (ridx, kx, ky, cx, cy)] == [np.int64] * 5
+        assert cov.dtype == np.float64
+        got = list(zip(ridx.tolist(), kx.tolist(), ky.tolist(),
+                       cx.tolist(), cy.tolist(), cov.tolist()))
+        want = [(i, *e) for i, r in enumerate(rects)
+                for e in cover_2d(*r, 12, fk, fk)]
+        assert got == want, fk
+        # small batches take the per-rect path; same rows, same order
+        for lo in range(0, 12, 3):
+            out = cover_2d_np(rects[lo:lo + 3], 12, fk)
+            assert out[0].dtype == np.int64 and out[5].dtype == np.float64
+            got = list(zip(*(a.tolist() for a in out)))
+            assert got == [(i - lo, *e) for i, *e in want
+                           if lo <= i < lo + 3], (fk, lo)
+    empty = cover_2d_np([], 12, 4)
+    assert [len(a) for a in empty] == [0] * 6

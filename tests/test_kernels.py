@@ -191,6 +191,51 @@ def test_dcm_mixed_levels_overestimates_bounded():
         assert est <= truth + 0.2 * 3000
 
 
+def test_dcm_rejects_out_of_domain_items():
+    """The combined (cell, prefix) key holds a prefix in L+1-lvl bits;
+    an item outside [0, 2^(L+1)) must raise instead of aliasing into a
+    neighbouring cell's counts."""
+    k = DCMKernel(log_domain=8, width=64, depth=3, exact_levels=9, seed=7)
+    cells = np.array([0, 1], dtype=np.int64)
+    ones = np.ones(2, dtype=np.int64)
+    k.build_grouped(cells, np.array([0, 511], dtype=np.int64), ones, ones)
+    for bad in (512, -1):
+        with pytest.raises(ValueError, match="item_domain"):
+            k.build_grouped(cells, np.array([3, bad], dtype=np.int64),
+                            ones, ones)
+
+
+def test_cm_deserialize_batch_matches_per_blob():
+    """The one-buffer batch decode equals per-blob deserialize on a
+    mixed sparse / dense / all-zero / legacy-pickle batch, and still
+    raises on a payload of another (d, w) anywhere in the batch."""
+    import pickle
+    cm = CMKernel(width=28, depth=3, seed=7)
+    rng = np.random.default_rng(11)
+    states = []
+    for i in range(40):
+        st = np.zeros((3, 28), dtype=np.int64)
+        nnz = [0, 1, 5, 84][i % 4]
+        st.ravel()[rng.choice(84, nnz, replace=False)] = \
+            rng.integers(1, 1 << 40, nnz)
+        states.append(st)
+    blobs = [cm.serialize(s) for s in states]
+    assert {b[:3] for b in blobs} == {b"CMS", b"CMD"}
+    nz = np.flatnonzero(states[1])
+    blobs[1] = pickle.dumps(("s", (3, 28), nz, states[1].ravel()[nz]))
+    blobs[3] = pickle.dumps(("d", states[3]))
+    want = np.stack([cm.deserialize(b) for b in blobs])
+    assert (want == np.stack(states)).all()
+    got = cm.deserialize_batch(blobs)
+    assert got.dtype == np.int64 and (got == want).all()
+    assert cm.deserialize_batch([]).shape == (0, 3, 28)
+    other = CMKernel(width=55, depth=4, seed=7)
+    for st in (np.zeros((4, 55), np.int64), np.ones((4, 55), np.int64)):
+        with pytest.raises(ValueError, match="does not match"):
+            cm.deserialize_batch(blobs[:5] + [other.serialize(st)]
+                                 + blobs[5:])
+
+
 def test_payload_codecs_roundtrip():
     """Raw-buffer payload codecs (the pickle replacement on the query
     hot path): exact + CM dense/sparse roundtrip, batch deserialize,

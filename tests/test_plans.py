@@ -104,15 +104,30 @@ def test_probe_scan_sized_small_store_not_bucketed_path(spark):
         SpatialSketchEngine.BROADCAST_COVER_ROWS = orig
 
 
-def test_query_values_equals_query(spark):
+def test_query_values_equals_query(spark, monkeypatch):
     """query_values (driver partial fold, the low-latency batch
     surface bench.py measures) must return IDENTICAL answers to the
-    DataFrame query() path for every query class — additive kinds
-    folded on the driver, merge kinds falling through to query()."""
+    DataFrame query() path for every query class — counts (and CM
+    freqs) from the driver-side serving index, the other additive
+    kinds folded on the driver, merge kinds falling through to
+    query() — and so must the Spark path the index replaces (reached
+    by a zero index budget)."""
     from spatialsketch_spark.gate import exact_store
+    from spatialsketch_spark.geo.build import SketchStore
     from spatialsketch_spark.geo.query import (QuerySpec,
                                                SpatialSketchEngine)
-    eng = SpatialSketchEngine(exact_store(spark, SF_ORACLE))
+
+    def spark_path(store):
+        with monkeypatch.context() as m:
+            m.setattr(SketchStore, "SERVE_INDEX_BYTES", 0)
+            twin = SketchStore(spark, store.df, store.cfg, store.kind,
+                               store.min_level, store.manifest)
+            assert twin.serve_index() is None
+            return SpatialSketchEngine(twin).query_values
+
+    ex = exact_store(spark, SF_ORACLE)
+    assert ex.serve_index() is not None
+    eng = SpatialSketchEngine(ex)
     rects = [(0, 0, 2047, 2047), (1024, 512, 3071, 1535),
              (100, 100, 1000, 900)]
     qs, qid = [], 0
@@ -125,20 +140,23 @@ def test_query_values_equals_query(spark):
     want = {int(r["qid"]): int(r["est"]) for r in eng.query(qs).collect()}
     got = eng.query_values(qs)
     assert got == want and len(got) == len(qs)
+    assert spark_path(ex)(qs) == want
     # kind-guard parity: a bad dispatch must raise, not return garbage
     from spatialsketch_spark.config import SketchConfig
-    from spatialsketch_spark.geo.build import SketchStore
     from spatialsketch_spark.geo.events import ITEM_DOMAIN, derive_geo_events
     cfg = SketchConfig.realistic(n=4096, eps=0.1, delta=0.05,
                                  item_domain=ITEM_DOMAIN)
     ev = derive_geo_events(spark, SF_ORACLE, 4096).limit(1000)
-    cm = SpatialSketchEngine(SketchStore.build(spark, ev, cfg, "cm", 4))
-    with pytest.raises(ValueError, match="not answerable"):
-        cm.query_values([QuerySpec(0, [rects[0]], "range_freq",
-                                   item=1, item_end=5)])
-    # CM fast path (counter-stack probe through the expansion index)
-    # must also equal the DataFrame path, including paired count+freq
-    # placements sharing a pid and a count-ONLY placement (NULL blob)
+    cm_store = SketchStore.build(spark, ev, cfg, "cm", 4)
+    cm = SpatialSketchEngine(cm_store)
+    for values in (cm.query_values, spark_path(cm_store)):
+        with pytest.raises(ValueError, match="not answerable"):
+            values([QuerySpec(0, [rects[0]], "range_freq",
+                              item=1, item_end=5)])
+    # the CM serving index and the CM Spark fast path (counter-stack
+    # probe through the expansion index) must both equal the DataFrame
+    # path, including paired count+freq placements sharing a pid and a
+    # count-ONLY placement (NULL blob)
     qs_cm = []
     for i, r in enumerate(rects):
         qs_cm.append(QuerySpec(2 * i, [r], "count"))
@@ -146,7 +164,9 @@ def test_query_values_equals_query(spark):
             qs_cm.append(QuerySpec(2 * i + 1, [r], "freq", item=17 + i))
     want_cm = {int(r["qid"]): int(r["est"])
                for r in cm.query(qs_cm).collect()}
+    assert cm_store.serve_index().cm is not None
     assert cm.query_values(qs_cm) == want_cm
+    assert spark_path(cm_store)(qs_cm) == want_cm
 
 
 def test_span_ops_stay_jvm_side(spark):
